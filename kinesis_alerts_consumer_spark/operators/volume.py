@@ -16,8 +16,9 @@ exactly a shuffle into a keyed stateful aggregation; in Spark it's a
 same "accumulate cheap, ship on tick" behavior with no custom code.
 
 A2 — max-delay gauge (delay.go:15-39): per batch
-``max(now - point_ts)``, swap-and-reset every 15 s; here a one-row
-aggregate computed per micro-batch in the sink.
+``max(now - point_ts)``, swap-and-reset every 15 s; here the
+:func:`max_delay` aggregate, observed per micro-batch on the sink's
+stage write.
 """
 
 from __future__ import annotations
@@ -134,12 +135,16 @@ def batch_log_volume(parsed_batch: DataFrame, batch_id: int = 0) -> DataFrame:
     )
 
 
-def max_delay_seconds(dd_points_df: DataFrame, now: Column | None = None) -> DataFrame:
-    """A2: one-row ``max(now - point_ts)`` in seconds, floored at 0
-    (delay.go:17-33 ignores zero timestamps; nulls drop here)."""
+def max_delay(ts: Column, now: Column | None = None) -> Column:
+    """A2 aggregate: ``max(now - ts)`` in seconds over the rows with a
+    ``ts``, floored at 0, and 0 when no row has one (delay.go:17-33
+    ignores zero timestamps; nulls drop here)."""
     now = now if now is not None else F.unix_timestamp(F.current_timestamp())
-    return dd_points_df.agg(
-        F.coalesce(
-            F.greatest(F.max(now - F.col("ts")), F.lit(0)), F.lit(0)
-        ).alias("max_log_delay")
-    )
+    return F.coalesce(
+        F.greatest(F.max(now - ts), F.lit(0)), F.lit(0)
+    ).alias("max_log_delay")
+
+
+def max_delay_seconds(dd_points_df: DataFrame, now: Column | None = None) -> DataFrame:
+    """A2: one-row :func:`max_delay` over the points' ``ts``."""
+    return dd_points_df.agg(max_delay(F.col("ts"), now))

@@ -12,7 +12,7 @@ Reference behavior reproduced (citations into /root/reference):
 - CloudWatch is best-effort: errors logged, never failing the batch
   (alerts_consumer.go:271-281);
 - per-batch max-delay gauge (A2) computed before submit
-  (alerts_consumer.go:250-255).
+  (alerts_consumer.go:250-255), observed on the batch's stage write.
 
 The default "transport" appends to local parquet/JSON directories (a
 dev stand-in for the Datadog/CloudWatch HTTP APIs); real HTTP clients
@@ -25,26 +25,48 @@ DLQ, delay gauge) is the engine's logic under test.
 
 from __future__ import annotations
 
-import itertools
 import json
+import logging
 import os
 import re
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-# CloudWatch PutMetricData accepts at most 20 data per call
-# (allowlist.go:6-7 pins the constraint; the reference keeps its
-# allowlist small enough to fit one call — the sink enforces it).
-CW_MAX_DATA_PER_CALL = 20
+from ..operators.volume import max_delay
 
-# Driver-collect cap for the CW path: the collect is safe ONLY because
-# the allowlist bounds the row count; this cap enforces that premise
-# (≈500 calls' worth) instead of trusting it.
-_CW_COLLECT_BOUND = 10_000
+# The columns of a projected record that quarantine, dd_points and
+# cw_data read — all the sink stages.
+_STAGED = (
+    "_raw", "timestamp", "error", "tag", "ignored", "dd_metrics", "cw_metrics"
+)
+
+
+def stage_batch(
+    projected: DataFrame, path: str, now: Column | None = None
+) -> tuple[DataFrame, float]:
+    """Write the sink's columns of ``projected`` to parquet at ``path``
+    and read them back, together with the batch's A2 max-delay gauge,
+    observed on that same write (no job of its own).
+
+    The gauge equals ``max_delay_seconds(dd_points(projected))``: all
+    points of a clean record carry the record's epoch, and only clean
+    records explode into points."""
+    staged = projected.select(*_STAGED)
+    point_ts = F.when(
+        ~F.col("ignored") & F.col("error").isNull(),
+        F.array_min(F.col("dd_metrics.ts")),
+    )
+    delay = Observation()
+    staged.observe(delay, max_delay(point_ts, now)).write.mode(
+        "overwrite"
+    ).parquet(path)
+    read = projected.sparkSession.read.schema(staged.schema).parquet(path)
+    return read, float(delay.get["max_log_delay"])
 
 
 @dataclass
@@ -166,8 +188,6 @@ class MetricsSink:
         base = self._path(*parts)
         stale = os.path.join(base, f"batch_id={int(batch_id)}")
         if os.path.isdir(stale):
-            import shutil
-
             shutil.rmtree(stale, ignore_errors=True)
         keys = ["batch_id"] + (["tag"] if tag else [])
         (
@@ -181,51 +201,31 @@ class MetricsSink:
     def process_batch(self, projected: DataFrame, batch_id: int = 0) -> None:
         from ..operators.project import cw_data, dd_points, quarantine
 
-        # The batch is consumed by FOUR actions (quarantine write,
-        # delay gauge, DD submit, CW chunks), so the expensive
-        # interpreted parse->route->project lineage must evaluate
-        # once — but in a parquet STAGING dir, not an executor-memory
-        # cache: persist() built 100+ MiB columnar batches per task
-        # concurrently across 32 threads and OOMed the 8g heap at the
-        # sf100 rehearsal (r9; 20M sampled events in one availableNow
-        # batch), the same grows-with-data-in-memory shape the
-        # st02-04 scratch-sink topology already bans. Parquet writers
-        # stream rows through bounded row-group buffers, and each
-        # downstream action re-reads columns it needs from disk. The
+        # A batch costs four Spark jobs: the stage write (which also
+        # observes the A2 gauge), then the quarantine write, DD submit
+        # and CW submit, which read the staged copy. So the expensive
+        # interpreted parse->route->project lineage evaluates once, in
+        # a parquet STAGING dir rather than an executor-memory cache:
+        # persist() built 100+ MiB columnar batches per task
+        # concurrently and OOMed the 8g heap at the sf100 rehearsal
+        # (20M sampled events in one availableNow batch), while
+        # parquet writers stream rows through bounded row-group
+        # buffers. Only the seven columns the sink reads are staged,
+        # so the variant maps and route arrays never reach disk. The
         # explicit schema on the read-back keeps empty micro-batches
-        # working (no part files to infer from). Same one-batch blast
-        # radius as _write_idempotent on replay: a re-run batch
-        # rewrites its own stage dir first.
-        # Staging cleanup is LOCAL-FS-only (shutil/os.path), the same
-        # assumption _write_idempotent's stale-partition delete makes;
-        # __post_init__ REJECTS non-local out_dir schemes so this can
-        # never silently no-op on an object store (ADVICE r10). The
-        # staging write itself sits INSIDE the try (ADVICE r9): a
-        # failed write/read-back otherwise leaked its stage dir until
-        # the same batch_id happened to replay.
-        import shutil
-
+        # working. A re-run batch rewrites its own stage dir first.
+        # Cleanup is local-fs-only (__post_init__ rejects other
+        # schemes), and the staging write sits inside the try so a
+        # failed write cannot leak its dir.
         stage = self._path("stage", f"batch_id={int(batch_id)}")
         shutil.rmtree(stage, ignore_errors=True)
-        schema = projected.schema
-        spark = projected.sparkSession
         try:
-            projected.write.mode("overwrite").parquet(stage)
-            projected = spark.read.schema(schema).parquet(stage)
-            dd = dd_points(projected)
-            cw = cw_data(projected)
-            quar = quarantine(projected)
+            staged, delay = stage_batch(projected, stage)
+            self._write_idempotent(quarantine(staged), batch_id, "quarantine")
 
-            self._write_idempotent(quar, batch_id, "quarantine")
-
-            # A2 max-delay gauge, computed from the batch's points
-            # (alerts_consumer.go:250-255), emitted like the
-            # reference's 15 s logMaxDelay (delay.go:35-39) — one
-            # whole file per batch_id so a replay overwrites its own
-            # prior attempt (same idempotence story as the parquet).
-            from ..operators.volume import max_delay_seconds
-
-            delay_row = max_delay_seconds(dd).collect()[0]
+            # A2 gauge, emitted like the reference's 15 s logMaxDelay
+            # (delay.go:35-39): one whole file per batch_id so a
+            # replay overwrites its own prior attempt.
             os.makedirs(self._path("gauges"), exist_ok=True)
             with open(
                 self._path("gauges", f"batch-{int(batch_id):06d}.json"), "w"
@@ -235,12 +235,13 @@ class MetricsSink:
                         {
                             "batch_id": batch_id,
                             "gauge": "max_log_delay",
-                            "value": float(delay_row["max_log_delay"]),
+                            "value": delay,
                         }
                     )
                     + "\n"
                 )
 
+            dd = dd_points(staged)
             submit = self.submit_dd or (
                 lambda df: self._write_idempotent(
                     df, batch_id, "dd", tag=True
@@ -263,55 +264,23 @@ class MetricsSink:
                 # PartialSendBatchError analogue: park the whole batch.
                 self._write_idempotent(dd, batch_id, "failed")
 
-            # CW: best-effort, only region-tagged data, never fails
-            # batch. One submit call per (tag, <=20-datum chunk) —
-            # each call maps to one PutMetricData against that
-            # region's API (alerts_consumer.go:272-278), which caps
-            # MetricData at 20 (allowlist.go:6-7).
-            #
-            # The CW side is bounded-small by construction (allowlisted
-            # series only, allowlist.go:8-10), so it is collected ONCE
-            # — a single Spark action per batch — and chunked
-            # client-side. Rows are sorted by a deterministic total key
-            # before chunking, so chunk membership is stable across
-            # recomputation (at-least-once replays re-send identical
-            # chunks rather than reshuffled ones).
+            # CW: best-effort, never fails the batch
+            # (alerts_consumer.go:271-281). One submit_cw call per
+            # batch with all region-tagged data; the transport owns
+            # the per-region, <=20-datum PutMetricData calls
+            # (transports.CloudWatchTransport). The default stand-in
+            # is one partitioned parquet append.
             try:
-                cw_submit = self.submit_cw or (
-                    lambda df: df.write.mode("append")
-                    .partitionBy("tag")
-                    .parquet(self._path("cw"))
+                (self.submit_cw or self._append_cw)(
+                    cw_data(staged).filter(F.col("tag") != "default")
                 )
-                cw_regional = cw.filter(F.col("tag") != "default")
-                # Keep the driver-collect bound HONEST: the CW side is
-                # small only because the allowlist is small. take(N+1)
-                # caps driver memory even if the allowlist grows
-                # pathologically; the raise lands in the outer
-                # never-fail except (CW stays best-effort, the batch
-                # proceeds — alerts_consumer.go:271-281 logs and
-                # continues the same way).
-                cw_rows = cw_regional.take(_CW_COLLECT_BOUND + 1)
-                if len(cw_rows) > _CW_COLLECT_BOUND:
-                    raise RuntimeError(
-                        "CloudWatch side exceeded the allowlist-bounded "
-                        f"collect cap ({_CW_COLLECT_BOUND} rows/batch); "
-                        "shrink the allowlist or move CW submit "
-                        "executor-side like DatadogTransport"
-                    )
-                cw_rows.sort(key=lambda r: (r["tag"], str(tuple(r))))
-                spark = projected.sparkSession
-                schema = cw_regional.schema
-                for _tag, grouped in itertools.groupby(
-                    cw_rows, key=lambda r: r["tag"]
-                ):
-                    rows = list(grouped)
-                    for i in range(0, len(rows), CW_MAX_DATA_PER_CALL):
-                        cw_submit(
-                            spark.createDataFrame(
-                                rows[i : i + CW_MAX_DATA_PER_CALL], schema
-                            )
-                        )
-            except Exception:  # noqa: BLE001
-                pass
+            except Exception:  # noqa: BLE001 — log, don't fail the batch
+                logging.getLogger(__name__).warning(
+                    "CloudWatch submit failed for batch %s", batch_id,
+                    exc_info=True,
+                )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+    def _append_cw(self, cw: DataFrame) -> None:
+        cw.write.mode("append").partitionBy("tag").parquet(self._path("cw"))

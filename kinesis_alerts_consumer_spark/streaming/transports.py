@@ -6,7 +6,7 @@ stand-in; these plug into its injection points::
     sink = MetricsSink(
         out_dir,
         submit_dd=DatadogTransport(api_key).submit,
-        submit_cw=CloudWatchTransport(region, creds).submit,
+        submit_cw=CloudWatchTransport(regions, creds).submit,
     )
 
 Reference behavior reproduced (citations into /root/reference):
@@ -16,10 +16,12 @@ Reference behavior reproduced (citations into /root/reference):
   lets the sink's RetryPolicy run the 5-attempt 50 ms exponential
   backoff (alerts_consumer.go:257, metrics.go:42).
 - CloudWatch: ``PutMetricData`` in namespace ``LogMetrics`` against the
-  tag's region (alerts_consumer.go:271-281, main.go:61-66). The sink
-  already chunks to <=20 data per call (allowlist.go:6-7), so each
-  ``submit`` is one API call. No boto3 in this container, so requests
-  are signed with a pure-stdlib AWS Signature V4 implementation (public
+  tag's own region, only for a region in the transport's fixed set
+  (alerts_consumer.go:271-281, main.go:61-66). The sink passes the
+  whole batch's region-tagged data in one ``submit``; the transport
+  splits it into one call per (tag, <=20-datum chunk)
+  (allowlist.go:6-7). No boto3 in this container, so requests are
+  signed with a pure-stdlib AWS Signature V4 implementation (public
   AWS spec).
 
 Scale posture (the reference emits ~1 point per routed record, so a
@@ -30,7 +32,8 @@ transport submits FROM THE EXECUTORS — ``submit`` runs
 (alerts_consumer.go:257-269) applied per partition. Nothing is
 materialized on the driver at any batch size. The CloudWatch frame is
 allowlist-gated (allowlist.go:8-10) and therefore bounded-small; it
-stays a driver-side collect by design. ``urlopen`` is injectable for
+stays one driver-side collect per batch by design, capped at
+``_CW_COLLECT_BOUND`` rows. ``urlopen`` is injectable for
 tests (it is pickled into the partition closure, so side effects of a
 fake are only visible driver-side when calling the chunk-level
 helpers directly).
@@ -41,16 +44,32 @@ from __future__ import annotations
 import datetime
 import hashlib
 import hmac
+import itertools
 import json
+import re
 import urllib.error
 import urllib.parse
 import urllib.request
 from dataclasses import dataclass, field
-from typing import Callable, Mapping
+from typing import Callable, Collection, Mapping
 
 from pyspark.sql import DataFrame
 
 __all__ = ["AwsCredentials", "CloudWatchTransport", "DatadogTransport"]
+
+# CloudWatch PutMetricData accepts at most 20 data per call
+# (allowlist.go:6-7 pins the constraint; the reference keeps its
+# allowlist small enough to fit one call).
+CW_MAX_DATA_PER_CALL = 20
+
+# Driver-collect cap for the CW path: the collect is safe ONLY because
+# the allowlist bounds the row count; this cap enforces that premise
+# (≈500 calls' worth) instead of trusting it.
+_CW_COLLECT_BOUND = 10_000
+
+# An AWS region name, e.g. us-west-2 or us-gov-west-1. It becomes part
+# of the endpoint hostname, so nothing else may.
+_REGION = re.compile(r"[a-z]{2}(-[a-z]+)+-[0-9]+")
 
 
 def _default_urlopen(req: urllib.request.Request, timeout: float):
@@ -160,9 +179,15 @@ class AwsCredentials:
 
 @dataclass
 class CloudWatchTransport:
-    """PutMetricData with stdlib SigV4 (service ``monitoring``)."""
+    """PutMetricData with stdlib SigV4 (service ``monitoring``).
 
-    region: str
+    ``regions`` is the fixed set of regions it posts to — the
+    reference's per-region client map (main.go:61-66). Each datum goes
+    to the region named by its ``tag``; data tagged with any other
+    region are skipped, so a tag from log data only reaches a hostname
+    when it is one of these names."""
+
+    regions: str | Collection[str]
     credentials: AwsCredentials
     namespace: str = "LogMetrics"
     timeout_s: float = 30.0
@@ -173,15 +198,40 @@ class CloudWatchTransport:
         repr=False,
     )
 
-    @property
-    def _host(self) -> str:
-        return f"monitoring.{self.region}.amazonaws.com"
+    def __post_init__(self) -> None:
+        regions = frozenset(
+            [self.regions] if isinstance(self.regions, str) else self.regions
+        )
+        bad = sorted(r for r in regions if not _REGION.fullmatch(r))
+        if bad:
+            raise ValueError(f"not AWS region names: {bad!r}")
+        self.regions = regions
 
     def submit(self, df: DataFrame) -> None:
-        """Submit one <=20-datum chunk (sinks chunk before calling)."""
-        rows = df.collect()
-        if not rows:
-            return
+        """Submit one micro-batch of CW data (sinks.cw_data rows with a
+        region ``tag``): one driver collect, then one PutMetricData per
+        (tag, <=20-datum chunk) against the tag's region. Rows are
+        sorted by a deterministic total key before chunking, so an
+        at-least-once replay re-sends identical chunks."""
+        rows = df.take(_CW_COLLECT_BOUND + 1)
+        if len(rows) > _CW_COLLECT_BOUND:
+            raise TransportError(
+                "CloudWatch side exceeded the allowlist-bounded collect "
+                f"cap ({_CW_COLLECT_BOUND} rows/batch); shrink the "
+                "allowlist or submit executor-side like DatadogTransport"
+            )
+        rows = sorted(
+            (r for r in rows if r["tag"] in self.regions),
+            key=lambda r: (r["tag"], str(tuple(r))),
+        )
+        for region, grouped in itertools.groupby(rows, key=lambda r: r["tag"]):
+            data = list(grouped)
+            for i in range(0, len(data), CW_MAX_DATA_PER_CALL):
+                self._post(
+                    region, self._params(data[i : i + CW_MAX_DATA_PER_CALL])
+                )
+
+    def _params(self, rows) -> dict[str, str]:
         params: dict[str, str] = {
             "Action": "PutMetricData",
             "Version": "2010-08-01",
@@ -205,13 +255,13 @@ class CloudWatchTransport:
                 value = dim["value"] if not isinstance(dim, str) else ""
                 params[f"{p}.Dimensions.member.{j}.Name"] = name
                 params[f"{p}.Dimensions.member.{j}.Value"] = value
-        self._post(params)
+        return params
 
-    def _post(self, params: Mapping[str, str]) -> None:
+    def _post(self, region: str, params: Mapping[str, str]) -> None:
         body = urllib.parse.urlencode(sorted(params.items()))
-        headers = self._sigv4_headers(body)
+        headers = self._sigv4_headers(region, body)
         req = urllib.request.Request(
-            f"https://{self._host}/",
+            f"https://{headers['Host']}/",
             data=body.encode("utf-8"),
             headers=headers,
             method="POST",
@@ -224,7 +274,7 @@ class CloudWatchTransport:
         if status != 200:
             raise TransportError(f"cloudwatch submit: HTTP {status}")
 
-    def _sigv4_headers(self, body: str) -> dict[str, str]:
+    def _sigv4_headers(self, region: str, body: str) -> dict[str, str]:
         """AWS Signature Version 4 (public spec), service=monitoring."""
         t = self.now()
         amz_date = t.strftime("%Y%m%dT%H%M%SZ")
@@ -234,7 +284,7 @@ class CloudWatchTransport:
 
         headers = {
             "Content-Type": "application/x-www-form-urlencoded; charset=utf-8",
-            "Host": self._host,
+            "Host": f"monitoring.{region}.amazonaws.com",
             "X-Amz-Date": amz_date,
         }
         if self.credentials.session_token:
@@ -256,7 +306,7 @@ class CloudWatchTransport:
                 payload_hash,
             ]
         )
-        scope = f"{datestamp}/{self.region}/{service}/aws4_request"
+        scope = f"{datestamp}/{region}/{service}/aws4_request"
         string_to_sign = "\n".join(
             [
                 "AWS4-HMAC-SHA256",
@@ -272,7 +322,7 @@ class CloudWatchTransport:
         k_date = _hmac(
             ("AWS4" + self.credentials.secret_key).encode("utf-8"), datestamp
         )
-        k_region = _hmac(k_date, self.region)
+        k_region = _hmac(k_date, region)
         k_service = _hmac(k_region, service)
         k_signing = _hmac(k_service, "aws4_request")
         signature = hmac.new(

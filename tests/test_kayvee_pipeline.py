@@ -323,9 +323,18 @@ def test_team_fallback_empty_and_nonstring(spark):
 
 
 def test_cw_submit_chunks_at_20(spark, tmp_path):
-    """45 region-tagged CW data in one batch -> 3 submit calls, each
-    <=20 rows and single-tag (one PutMetricData per call)."""
+    """45 region-tagged CW data in one batch -> the sink hands them to
+    CloudWatchTransport.submit in one call, which makes 3 POSTs, each
+    <=20 members and single-tag (one PutMetricData per call)."""
+    import urllib.parse
+
     from kinesis_alerts_consumer_spark.streaming.sinks import MetricsSink
+    from kinesis_alerts_consumer_spark.streaming.transports import (
+        AwsCredentials,
+        CloudWatchTransport,
+    )
+
+    from .test_transports import FakeResponse
 
     lines = [
         HEADER + body(
@@ -339,12 +348,18 @@ def test_cw_submit_chunks_at_20(spark, tmp_path):
     ]
     out = run(spark, lines)
     calls = []
-    sink = MetricsSink(
-        str(tmp_path / "out"),
-        submit_cw=lambda df: calls.append(
-            [(r.tag, r.metric_name) for r in df.collect()]
-        ),
+
+    def fake_urlopen(req, timeout):
+        tag = req.host.split(".")[1]
+        form = dict(urllib.parse.parse_qsl(req.data.decode()))
+        calls.append([(tag, v) for k, v in form.items()
+                      if k.endswith(".MetricName")])
+        return FakeResponse(200)
+
+    transport = CloudWatchTransport(
+        "us-west-2", AwsCredentials("A", "B"), urlopen=fake_urlopen
     )
+    sink = MetricsSink(str(tmp_path / "out"), submit_cw=transport.submit)
     sink.process_batch(out, batch_id=0)
     assert len(calls) == 3
     assert sorted(len(c) for c in calls) == [5, 20, 20]

@@ -387,9 +387,10 @@ def test_metrics_sink_stage_dir_cleaned_even_if_staging_write_fails(
         "value", "test-env",
     ).withColumn(
         # evaluation bomb: raise_error fires when the staging write
-        # actually evaluates rows, exactly the mid-write failure shape
-        "boom",
-        F.raise_error(F.lit("staging write failure (test)")),
+        # actually evaluates rows, exactly the mid-write failure shape.
+        # It sits on a staged column: the stage prunes any other.
+        "tag",
+        F.raise_error(F.lit("staging write failure (test)")).cast("string"),
     )
     out = tmp_path / "out"
     sink = MetricsSink(out_dir=str(out))
@@ -397,6 +398,83 @@ def test_metrics_sink_stage_dir_cleaned_even_if_staging_write_fails(
         sink.process_batch(batch, batch_id=7)
     stage = out / "stage" / "batch_id=7"
     assert not stage.exists(), "failed staging write leaked its dir"
+
+
+def _sink_lines():
+    """Clean records (one CloudWatch-bound per region), plus records
+    that must not reach the gauge, each OLDER than every clean one: a
+    quarantined one, an ignored one (no alert route), a zero-route one
+    and an unparseable line."""
+    def line(ts, routes, **fields):
+        fields["_kvmeta"] = {"team": "t", "routes": routes}
+        return f"{ts} host prod--app/arn[1]: " + json.dumps(fields)
+
+    def alert(stat="counter", series="s"):
+        return {"type": "alerts", "series": series, "dimensions": [],
+                "stat_type": stat, "value_field": "value", "rule": "r"}
+
+    return [
+        line("2017-08-15T18:39:07+00:00", [alert()], value=1),
+        line("2017-08-15T18:40:07+00:00", [alert(), alert("gauge")], value=2),
+        line("2017-08-15T18:41:07+00:00", [alert(series="ContainerExitCount")],
+             region="us-west-2", value=1),
+        line("2017-08-15T18:42:07+00:00", [alert(series="ContainerExitCount")],
+             region="us-east-1", value=1),
+        line("2010-01-01T00:00:00+00:00", [alert("event")], value=1),
+        line("2009-01-01T00:00:00+00:00",
+             [{"type": "metric", "channel": "#c", "message": "m"}]),
+        line("2008-01-01T00:00:00+00:00", []),
+        "garbage line",
+    ]
+
+
+def test_stage_gauge_equals_max_delay_of_dd_points(spark, tmp_path):
+    """The A2 gauge observed on the stage write equals the reference
+    formula over the batch's Datadog points, and reads 0 on an empty
+    batch."""
+    from kinesis_alerts_consumer_spark.operators.volume import (
+        max_delay_seconds,
+    )
+    from kinesis_alerts_consumer_spark.streaming.sinks import stage_batch
+
+    batch = process_lines(
+        spark.createDataFrame([(l,) for l in _sink_lines()], "value string"),
+        "value", "test-env",
+    )
+    now = F.lit(1_600_000_000)
+    want = max_delay_seconds(dd_points(batch), now).first()["max_log_delay"]
+    _, got = stage_batch(batch, str(tmp_path / "s1"), now)
+    assert got == want == 1_600_000_000 - 1502822347  # 18:39:07
+    _, empty = stage_batch(batch.limit(0), str(tmp_path / "s2"), now)
+    assert empty == 0
+
+
+def test_metrics_sink_job_budget(spark, tmp_path):
+    """A micro-batch with region-tagged CloudWatch data costs at most
+    four Spark jobs: stage write (with the gauge), quarantine, DD, CW."""
+    batch = process_lines(
+        spark.createDataFrame([(l,) for l in _sink_lines()], "value string"),
+        "value", "test-env",
+    )
+    from kinesis_alerts_consumer_spark.pipeline import cw_data
+
+    assert cw_data(batch).filter(F.col("tag") != "default").count() == 2
+    from kinesis_alerts_consumer_spark.streaming.sinks import MetricsSink
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    floor = max(tracker.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup("sink-job-budget", "sink job budget")
+    try:
+        MetricsSink(str(tmp_path / "out")).process_batch(batch, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(tracker.getJobIdsForGroup("sink-job-budget"))
+    jobs |= {j for j in tracker.getJobIdsForGroup(None) if j > floor}
+    assert len(jobs) <= 4, sorted(jobs)
+    cw = spark.read.parquet(str(tmp_path / "out" / "cw"))
+    assert sorted(r.tag for r in cw.select("tag").collect()) == [
+        "us-east-1", "us-west-2"]
 
 
 def test_transform_with_state_running_totals(spark, tmp_path):

@@ -67,9 +67,9 @@ def dd_frame(spark, n=2):
     return spark.createDataFrame(rows, DD_SCHEMA)
 
 
-def cw_frame(spark, n=2):
+def cw_frame(spark, n=2, tag="us-west-2"):
     rows = [
-        ("us-west-2", "ContainerExitCount", [("env", "prod")], float(i),
+        (tag, "ContainerExitCount", [("env", "prod")], float(i),
          1500 + i, 1)
         for i in range(n)
     ]
@@ -303,7 +303,7 @@ def test_cw_signature_is_deterministic(spark):
             now=lambda: datetime.datetime(
                 2026, 1, 2, 3, 4, 5, tzinfo=datetime.timezone.utc
             ),
-        ).submit(cw_frame(spark))
+        ).submit(cw_frame(spark, tag="us-east-1"))
     assert sigs[0] == sigs[1]
     assert len(sigs[0]) == 64
 
@@ -325,6 +325,100 @@ def test_cw_empty_frame_no_call(spark):
         urlopen=lambda req, timeout: calls.append(req) or FakeResponse(200),
     ).submit(cw_frame(spark).limit(0))
     assert calls == []
+
+
+def test_cw_posts_each_tag_to_its_own_region(spark):
+    """Each tag's data is posted to and signed for that tag's region
+    (the reference's per-region client, main.go:61-66)."""
+    seen = []
+
+    def fake_urlopen(req, timeout):
+        seen.append(req)
+        return FakeResponse(200)
+
+    CloudWatchTransport(
+        ("us-west-2", "us-east-2"), AwsCredentials("A", "B"),
+        urlopen=fake_urlopen,
+    ).submit(cw_frame(spark).union(cw_frame(spark, tag="us-east-2")))
+    assert sorted(r.host for r in seen) == [
+        "monitoring.us-east-2.amazonaws.com",
+        "monitoring.us-west-2.amazonaws.com",
+    ]
+    for req in seen:
+        region = req.host.split(".")[1]
+        assert f"/{region}/monitoring/aws4_request" in req.get_header(
+            "Authorization")
+
+
+def test_cw_unknown_tag_makes_no_request(spark):
+    calls = []
+    t = CloudWatchTransport(
+        "us-west-2", AwsCredentials("A", "B"),
+        urlopen=lambda req, timeout: calls.append(req) or FakeResponse(200),
+    )
+    t.submit(cw_frame(spark, tag="eu-west-1"))
+    t.submit(cw_frame(spark, tag="evil.example.com/x"))
+    assert calls == []
+
+
+def test_cw_regions_must_be_region_names():
+    with pytest.raises(ValueError, match="not AWS region names"):
+        CloudWatchTransport(("us-west-2", "evil.example.com/x"),
+                            AwsCredentials("A", "B"))
+
+
+def test_cw_collect_bound_raises_in_transport(spark):
+    from kinesis_alerts_consumer_spark.streaming.transports import (
+        _CW_COLLECT_BOUND,
+    )
+
+    calls = []
+    frame = cw_frame(spark, n=1).crossJoin(
+        spark.range(_CW_COLLECT_BOUND + 1)).drop("id")
+    with pytest.raises(TransportError, match="collect cap"):
+        CloudWatchTransport(
+            "us-west-2", AwsCredentials("A", "B"),
+            urlopen=lambda req, timeout: calls.append(req) or FakeResponse(200),
+        ).submit(frame)
+    assert calls == []
+
+
+def test_sink_completes_when_cw_transport_hits_collect_bound(
+    spark, tmp_path, monkeypatch
+):
+    """CloudWatch stays best-effort (alerts_consumer.go:271-281): a
+    transport raising on the collect bound neither fails the batch nor
+    stops its DD delivery."""
+    from pyspark.sql import functions as F
+
+    import kinesis_alerts_consumer_spark.streaming.transports as transports
+    from kinesis_alerts_consumer_spark.pipeline import cw_data, process_lines
+
+    monkeypatch.setattr(transports, "_CW_COLLECT_BOUND", 2)
+    route = ('{"type": "alerts", "series": "ContainerExitCount", '
+             '"dimensions": [], "stat_type": "counter", "rule": "r"}')
+    lines = spark.createDataFrame(
+        [(
+            f"2021-01-01T00:00:0{i} host p--a/arn[1]: "
+            '{"region": "us-west-2", '
+            '"_kvmeta": {"team": "t", "routes": [' + route + "]}}",
+        ) for i in range(transports._CW_COLLECT_BOUND + 1)],
+        "value string",
+    )
+    batch = process_lines(lines, "value", "test-env")
+    assert cw_data(batch).filter(
+        F.col("tag") == "us-west-2").count() == transports._CW_COLLECT_BOUND + 1
+    calls = []
+    sink = MetricsSink(
+        str(tmp_path),
+        submit_cw=CloudWatchTransport(
+            "us-west-2", AwsCredentials("A", "B"),
+            urlopen=lambda req, timeout: calls.append(req) or FakeResponse(200),
+        ).submit,
+    )
+    sink.process_batch(batch, batch_id=0)
+    assert calls == []
+    assert spark.read.parquet(str(tmp_path / "dd")).count() == 3
 
 
 def test_retry_policy_backoff_sequence(monkeypatch):
